@@ -914,93 +914,19 @@ def assign_dense_ids(
     """Dense, gap-free global row ids 1..N in ``order_cols`` order —
     WITHOUT the classic 100 TB trap of ``row_number() OVER (ORDER BY
     …)``, whose empty-partitionBy window collapses the whole table
-    into ONE task.
+    into ONE task. Global dense ids are :func:`grouped_row_ranks`
+    with no group columns: partition-local row ranks plus per-
+    partition count offsets.
 
-    Three distributed steps instead:
-
-    1. ``repartitionByRange`` + ``sortWithinPartitions`` on the order
-       key (one range shuffle; sampling-based bounds are
-       deterministic for a fixed input).
-    2. Partition-local index for free from
-       ``monotonically_increasing_id()`` — its layout IS
-       ``(partition_id << 33) | local_row_index`` on an ordered scan,
-       so no second shuffle and no per-partition Python.
-    3. Per-partition row counts (a #partitions-row aggregate) turned
-       into cumulative offsets by a tiny driver-side scan, broadcast
-       back, and added to the local index.
-
-    ``order_cols`` must be a unique key: range-partition bounds may
-    split ties across partitions, which would make ids of tied rows
-    depend on placement.
-
-    Lifecycle: the pin is
-    :func:`~...operators.util.materialize_once` (``localCheckpoint``
-    by default, never ``persist``), so it never enters the
-    CacheManager — no plan-substitution leakage into later queries,
-    no clearCache() bookkeeping — and its blocks are released by the
-    ContextCleaner once the returned frame goes out of scope
-    (``$SPARK_GRAFT_MATERIALIZE=table`` swaps in a short-lived table
-    for executor-loss durability). Unpinning before the final action
-    would recompute the layout and break id/offset agreement; the pin
-    makes that impossible by construction (both passes read the same
-    materialized rows).
-
-    Pass ``bounds`` = (min, max) of the FIRST order column to use
-    the data-derived bucket split instead (r8): global dense ids are
-    per-bucket row ranks plus per-bucket count offsets, i.e. exactly
-    :func:`grouped_row_ranks` with no group columns — one shuffle,
-    no checkpoint pin, no driver-side offset scan.
+    ``order_cols`` must be a unique key (ids of tied rows would
+    depend on placement). Pass ``bounds`` = (min, max) of the FIRST
+    order column to split on the value itself (one shuffle, no
+    checkpoint pin); without bounds the split is a pinned range
+    shuffle (:func:`grouped_running_sums`).
     """
-    if bounds is not None:
-        return grouped_row_ranks(
-            df, [], order_cols, id_col,
-            num_partitions=num_partitions, bounds=bounds,
-        )
-    if num_partitions is None:
-        # scale with the cluster, not a constant: 2× the scheduler's
-        # parallelism keeps every core busy through the final stage
-        num_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
-    part = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
-    ).sortWithinPartitions(*order_cols)
-    # PIN the physical layout: the counts pass and the final join
-    # would otherwise evaluate the range shuffle twice, and AQE may
-    # coalesce its partitions DIFFERENTLY per evaluation (the two
-    # queries have different shapes) — shifting every (pid, local)
-    # pair between the offset map and the output. materialize_once
-    # pins one evaluation both passes share (lazy localCheckpoint by
-    # default — no CacheManager entry a persist() would leave behind;
-    # $SPARK_GRAFT_MATERIALIZE=table for executor-loss durability on
-    # a real cluster).
-    with_mid = materialize_once(
-        part.withColumn("__mid", F.monotonically_increasing_id()),
-        name="dense_ids_pin",
-    )
-    with_pid = with_mid.withColumn(
-        "__pid", F.shiftrightunsigned("__mid", 33).cast("long")
-    ).withColumn(
-        "__local", F.expr(f"__mid & {(1 << 33) - 1}").cast("long")
-    )
-    counts = (
-        with_pid.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy("__pid")
-        .collect()
-    )
-    offsets, acc = {}, 0
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["__n"]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "__pid long, __off long"
-        )
-    )
-    return (
-        with_pid.join(off_df, "__pid")
-        .withColumn(id_col, (F.col("__off") + F.col("__local") + 1))
-        .drop("__mid", "__pid", "__local", "__off")
+    return grouped_row_ranks(
+        df, [], order_cols, id_col,
+        num_partitions=num_partitions, bounds=bounds,
     )
 
 
@@ -1016,8 +942,7 @@ def grouped_running_sums(
     single-task-per-group sort is the 100 TB trap when groups are few
     and large (a 3-value key funnels the whole table through 3 tasks).
 
-    Same decomposition as :func:`assign_dense_ids`, generalized from
-    row indices to weighted prefix sums:
+    Three distributed steps:
 
     1. ``repartitionByRange`` on (group, order) — one range shuffle;
        sampling-based bounds are deterministic for a fixed input —
@@ -1098,79 +1023,6 @@ def grouped_running_sums(
         "__pid",
         *[f"__loc_{c}" for c in sum_cols],
         *[f"__off_{c}" for c in sum_cols],
-    )
-
-
-def grouped_running_max(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str | list[str],
-    max_cols: list[str],
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
-    order, partition-parallel — :func:`grouped_running_sums` with the
-    monoid swapped from (+, 0) to (max, −∞): per-physical-partition
-    local prefix maxes, per-(partition, group) totals, and an
-    EXCLUSIVE running max over the metadata-sized totals frame as the
-    offset, combined with ``greatest`` (which skips the NULL offset a
-    group's first partition has — max's identity needs no sentinel).
-    Same contracts: one row per (group, order), range shuffle pinned
-    by a lazy localCheckpoint, parallelism scales with
-    ``num_partitions`` not group count. Appends ``{col}_rmax``.
-
-    This is the high-water-mark primitive: replaces
-    ``max(x) OVER (PARTITION BY <few-value key> ORDER BY … ROWS
-    UNBOUNDED PRECEDING)`` — whose one-task-per-group sort is the
-    100 TB ceiling — for watermark/lateness audits and monotone
-    envelope computations."""
-    if num_partitions is None:
-        num_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
-    order_cols = (
-        [order_col] if isinstance(order_col, str) else list(order_col)
-    )
-    keys = [*group_cols, *order_cols]
-    part = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in keys]
-    )
-    pinned = materialize_once(
-        part.withColumn("__pid", F.spark_partition_id().cast("long")),
-        name="rmax_pin",
-    )
-    wloc = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = pinned.select(
-        "*", *[F.max(c).over(wloc).alias(f"__loc_{c}") for c in max_cols]
-    )
-    totals = pinned.groupBy("__pid", *group_cols).agg(
-        *[F.max(c).alias(f"__t_{c}") for c in max_cols]
-    )
-    woff = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__pid",
-        *group_cols,
-        *[
-            F.max(f"__t_{c}").over(woff).alias(f"__off_{c}")
-            for c in max_cols
-        ],
-    )
-    out = local.join(F.broadcast(offsets), ["__pid", *group_cols])
-    for c in max_cols:
-        out = out.withColumn(
-            f"{c}_rmax",
-            F.greatest(F.col(f"__loc_{c}"), F.col(f"__off_{c}")),
-        )
-    return out.drop(
-        "__pid",
-        *[f"__loc_{c}" for c in max_cols],
-        *[f"__off_{c}" for c in max_cols],
     )
 
 
@@ -1362,18 +1214,23 @@ def grouped_running_max_dense(
     share_input: bool = False,
     bounds: tuple | None = None,
 ) -> DataFrame:
-    """:func:`grouped_running_max` specialized to a DENSE-ish integer
-    ``order_col`` (an arrival sequence / row id): the parallel split
-    is a DATA-DERIVED range bucket ``order_col div width`` instead of
-    ``spark_partition_id`` over a sampled range shuffle. Because the
-    bucket is a pure function of the row, the two consumers (local
-    prefix maxes, per-bucket totals) agree by construction — no
+    """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
+    order over an integer ``order_col`` (an arrival sequence / row
+    id), partition-parallel — the replacement for ``max(x) OVER
+    (PARTITION BY <few-value key> ORDER BY … ROWS UNBOUNDED
+    PRECEDING)``, whose one-task-per-group sort is the 100 TB
+    ceiling. It is the prefix machinery of
+    :func:`grouped_running_sums_bucketed` with the monoid swapped
+    from (+, 0) to (max, −∞): per-bucket local prefix maxes, per-
+    (bucket, group) totals, and an EXCLUSIVE running max over the
+    metadata-sized totals frame as the offset, combined with
+    ``greatest`` (which skips the NULL offset a group's first bucket
+    has). The parallel split is a DATA-DERIVED range bucket
+    ``order_col div width``; because the bucket is a pure function
+    of the row, the two consumers agree by construction — no
     localCheckpoint pin, no range-sampling job, and the bucket+group
-    hash exchange the window inserts is the ONLY fact shuffle (the
-    generic operator pays a range shuffle, a checkpoint
-    materialization, AND a second full hash shuffle because the
-    checkpointed lineage forgets its layout). Appends
-    ``{col}_rmax``. ``share_input`` (default False — this machinery
+    hash exchange the window inserts is the ONLY fact shuffle.
+    Appends ``{col}_rmax``. ``share_input`` (default False — this machinery
     runs at ROW grain, so the input is usually a bare pruned scan
     and the spine IS the fact) follows the semantics documented at
     :func:`grouped_running_sums_bucketed`.

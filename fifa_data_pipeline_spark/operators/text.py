@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from fifa_data_pipeline_spark.operators.util import exploded, pin
+from fifa_data_pipeline_spark.operators.util import exploded, let1, pin
 from fifa_data_pipeline_spark.sources.io import spread
 
 #: Tiny English-stopword list used by the heuristic scorer/lang-id.
@@ -568,8 +568,6 @@ def lang_id(df: DataFrame, text_col: str = "text", alias: str = "lang_guess") ->
     each inline their own copy of the split, doubling the tokenize
     cost per evaluation site (and grouping keys built on ``alias``
     get substituted into aggregates, multiplying sites)."""
-    from fifa_data_pipeline_spark.operators.util import let1
-
     toks = tokens(text_col)
     ratio = let1(
         toks,
@@ -638,9 +636,9 @@ def position_ngrams(arr: Column | str, w: int) -> Column:
     ``zip_with`` over ``w`` shifted slices, so the source array is
     referenced O(w) times total.
 
-    Construction: a LET BINDING via ``transform(array(arr), t -> …)``
-    — the outer single-element transform evaluates ``arr`` exactly
-    once and binds it to the lambda variable ``t``; the inner
+    Construction: a LET BINDING (:func:`~fifa_data_pipeline_spark.
+    operators.util.let1`) evaluates ``arr`` exactly once and binds
+    it to the lambda variable ``t``; the inner
     per-position ``slice(t, i, w)`` then reads the materialized
     array. Writing ``slice(arr, i, w)`` directly instead re-evaluates
     the producing expression (e.g. the upstream ``split``) once per
@@ -652,18 +650,15 @@ def position_ngrams(arr: Column | str, w: int) -> Column:
     but copies each gram's characters O(w) times — measured slower
     at w=8 than this form.)"""
     arr = F.col(arr) if isinstance(arr, str) else arr
-    return F.element_at(
-        F.transform(
-            F.array(arr),
-            lambda t: F.when(
-                F.size(t) >= w,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(t) - w + 1),
-                    lambda i: F.concat_ws(" ", F.slice(t, i, w)),
-                ),
-            ).otherwise(F.expr("array()").cast("array<string>")),
-        ),
-        1,
+    return let1(
+        arr,
+        lambda t: F.when(
+            F.size(t) >= w,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - w + 1),
+                lambda i: F.concat_ws(" ", F.slice(t, i, w)),
+            ),
+        ).otherwise(F.expr("array()").cast("array<string>")),
     )
 
 
@@ -682,20 +677,17 @@ def position_gram_hashes(arr: Column | str, w: int) -> Column:
     output. Same let-binding discipline (the token-hash array
     evaluates once, not per position)."""
     arr = F.col(arr) if isinstance(arr, str) else arr
-    return F.element_at(
-        F.transform(
-            F.array(F.transform(arr, lambda t: F.xxhash64(t))),
-            lambda hs: F.when(
-                F.size(hs) >= w,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(hs) - w + 1),
-                    lambda i: F.xxhash64(
-                        *[F.element_at(hs, i + F.lit(j)) for j in range(w)]
-                    ),
+    return let1(
+        F.transform(arr, lambda t: F.xxhash64(t)),
+        lambda hs: F.when(
+            F.size(hs) >= w,
+            F.transform(
+                F.sequence(F.lit(1), F.size(hs) - w + 1),
+                lambda i: F.xxhash64(
+                    *[F.element_at(hs, i + F.lit(j)) for j in range(w)]
                 ),
-            ).otherwise(F.expr("array()").cast("array<bigint>")),
-        ),
-        1,
+            ),
+        ).otherwise(F.expr("array()").cast("array<bigint>")),
     )
 
 

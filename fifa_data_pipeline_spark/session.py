@@ -117,9 +117,15 @@ def get_spark(
     # without code edits; defaults above stay the bench posture.
     # Caller-passed extra_conf still wins (applied last).
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if kv.strip():
-            k, v = kv.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+        if not kv.strip():
+            continue
+        if "=" not in kv:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: segment {kv.strip()!r} is not"
+                " a key=value pair"
+            )
+        k, v = kv.split("=", 1)
+        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

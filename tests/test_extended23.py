@@ -4,6 +4,7 @@ sharded training export, PNG codec registry wiring."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pyspark.sql.functions as F
 
@@ -121,13 +122,20 @@ def test_dense_ids_are_gapfree_and_windowless(spark, sf_dir):
     # ids follow the key order
     by_key = sorted(rows, key=lambda r: r.o_orderkey)
     assert [r.row_id for r in by_key] == ids
-    # the whole point: no global-sort window (1-task collapse); the
-    # range shuffle now lives BEHIND the lazy localCheckpoint pin, so
-    # the visible plan scans the pinned RDD instead of showing
-    # rangepartitioning directly
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "ExistingRDD" in plan
+    # the whole point: no global-sort window (1-task collapse). The
+    # row-rank window orders by the key and must partition by __pid
+    # (partition-local); the range shuffle lives BEHIND the lazy
+    # localCheckpoint pin, so the plan scans the pinned RDD
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    specs = re.findall(
+        r"windowspecdefinition\((.*?)specifiedwindowframe", plan
+    )
+    assert specs, "expected window specs in the plan"
+    for spec in specs:
+        if "o_orderkey#" in spec:
+            assert "__pid" in spec, f"global-sort window spec: {spec}"
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in executed
 
 
 def test_dense_ids_bucketed_path_matches(spark, sf_dir):

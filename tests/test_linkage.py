@@ -245,8 +245,9 @@ def test_fs_pattern_report_integer_block_key(spark):
 
 
 def test_linkage_rejects_float_fields(spark):
-    """r11 ADVICE: the string-cast forms must refuse float fields
-    instead of silently diverging on -0.0/NaN."""
+    """r11 ADVICE: the string-cast forms must refuse float fields —
+    and the report its float blocking key, which it also joins on a
+    string cast — instead of silently diverging on -0.0/NaN."""
     import pytest
 
     from fifa_data_pipeline_spark.operators.linkage import (
@@ -260,3 +261,8 @@ def test_linkage_rejects_float_fields(spark):
         field_u_probabilities(a, b, ["val"])
     with pytest.raises(TypeError, match="float-typed"):
         fs_pattern_report(a, b, "blk", [("val", 0.9)])
+    c = spark.createDataFrame([("x", 0.0)], ["name", "blk"])
+    d = spark.createDataFrame([("x", -0.0)], ["name", "blk"])
+    with pytest.raises(TypeError, match=r"float-typed field\(s\) \['blk'\]"):
+        fs_pattern_report(c, d, "blk", [("name", 0.9)])
+

@@ -411,40 +411,6 @@ def test_woe_iv_known_values(spark):
     assert all(abs(r.woe) < 100 for r in z.values())  # finite, smoothed
 
 
-def test_grouped_running_max_matches_window_form(spark):
-    """Partition-parallel prefix max must equal the single-window
-    running max, including the cross-partition handoff (NULL offset
-    for a group's first partition)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from fifa_data_pipeline_spark.operators.relational import (
-        grouped_running_max,
-    )
-
-    rows = [
-        (i, f"g{i % 3}", float((i * 193) % 500) - 250.0)
-        for i in range(2000)
-    ]
-    df = spark.createDataFrame(rows, ["i", "g", "v"])
-    got = {
-        (r["g"], r["i"]): r["v_rmax"]
-        for r in grouped_running_max(
-            df, ["g"], ["i"], ["v"], num_partitions=7
-        ).collect()
-    }
-    w = (
-        Window.partitionBy("g")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {
-        (r["g"], r["i"]): r["rm"]
-        for r in df.withColumn("rm", F.max("v").over(w)).collect()
-    }
-    assert got == want
-
-
 def test_grouped_running_sums_bucketed_matches_window_form(spark):
     """The value-range-bucketed prefix sum must equal the single-
     window running sum for skewed doubles (most mass in one bucket),
